@@ -19,15 +19,37 @@ Connector kinds:
 - ``QuickwitSource`` / ``ElasticsearchSource`` / ``SplunkSource``
   (miso_spark.sources.external): register + declare capabilities, fail
   at connect time — the services aren't reachable in this environment.
+
+Schema cache (``ParquetDirSource`` and ``DynamicParquetDirSource``):
+parquet schema inference is a Spark job, so paying it on every scan put
+a job and ~100 ms into every query's plan build. Each connector
+instance keeps, per collection, the inferred schema and the
+nano-timestamp column list, stamped with
+
+- the collection's file signature from ``os.stat``: (inode, mtime_ns,
+  size) of a single file; for a Spark output directory, of the
+  directory and of every entry beneath it, by name;
+- the session confs that steer parquet inference
+  (``_PARQUET_INFERENCE_CONFS``: nanosAsLong, inferTimestampNTZ, …).
+
+Every scan recomputes the stamp. On a match it reads with
+``spark.read.schema(s).parquet(path)``, which runs no job; on a
+mismatch it infers again. ``write`` drops the collection's entry. Only
+the schema is cached, never a DataFrame: a reused DataFrame would share
+attribute ids between the two sides of a self-join. The cache is
+bounded by the connector's collections and goes with the instance
+(``SourceRegistry.unregister``). A missing collection is not cached; its
+scan raises Spark's own PATH_NOT_FOUND error.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampNTZType
 
 # ---------------------------------------------------------------------------
 # capability vocabulary — one name per Connector::apply_* hook in the
@@ -126,46 +148,131 @@ def _nano_ts_columns(path: str) -> list[str]:
     return out
 
 
-def _denaive_ntz(df: DataFrame) -> DataFrame:
-    """Cast any TIMESTAMP_NTZ column to session-TZ TIMESTAMP.
-
-    Belt-and-braces for externally built sessions that didn't apply
-    RUNTIME_CONFS (``spark.sql.parquet.inferTimestampNTZ.enabled=false``):
-    under Spark 4's default, naive timestamp[us] parquet infers as NTZ,
-    which rejects ``cast(long)`` / ``unix_micros`` / ``withWatermark``.
-    The engine's timestamp semantics are session-TZ TIMESTAMP (UTC),
-    matching the DuckDB oracle's naive reading, so the cast is a
-    wall-clock-preserving relabel under UTC."""
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+#: session confs that change what parquet schema inference returns —
+#: part of every cached schema's stamp, so a cached read returns what an
+#: uncached read returns under the session's current settings
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
 
 
-class ParquetDirSource(Source):
+def _file_signature(path: str) -> tuple:
+    """A collection's state on disk from ``os.stat`` alone: (inode,
+    mtime_ns, size) of the path and, for a directory (Spark's output
+    layout), of every entry beneath it by name. Raises OSError when the
+    path is missing."""
+    st = os.stat(path)
+    sig = (st.st_ino, st.st_mtime_ns, st.st_size)
+    if not stat.S_ISDIR(st.st_mode):
+        return sig
+    with os.scandir(path) as it:
+        return sig, tuple(sorted((e.name, _file_signature(e.path)) for e in it))
+
+
+def _to_engine_types(df: DataFrame, schema: StructType, nanos: list[str]) -> DataFrame:
+    """Convert a raw parquet read to the engine's timestamp semantics in
+    one projection (``df`` unchanged when no column needs it):
+
+    - nano-long columns (``nanos``) → µs TIMESTAMP; ns → µs truncation
+      matches how µs-native engines read the file.
+    - TIMESTAMP_NTZ → session-TZ TIMESTAMP. Belt-and-braces for
+      externally built sessions that didn't apply RUNTIME_CONFS
+      (``spark.sql.parquet.inferTimestampNTZ.enabled=false``): under
+      Spark 4's default, naive timestamp[us] parquet infers as NTZ,
+      which rejects ``cast(long)`` / ``unix_micros`` /
+      ``withWatermark``. The engine's timestamp semantics are session-TZ
+      TIMESTAMP (UTC), matching the DuckDB oracle's naive reading, so
+      the cast is a wall-clock-preserving relabel under UTC."""
+    exprs, changed = [], False
+    for f in schema.fields:
+        q = "`" + f.name.replace("`", "``") + "`"
+        if f.name in nanos:
+            exprs.append(f"timestamp_micros({q} DIV 1000) AS {q}")
+        elif isinstance(f.dataType, TimestampNTZType):
+            exprs.append(f"CAST({q} AS TIMESTAMP) AS {q}")
+        else:
+            exprs.append(q)
+            continue
+        changed = True
+    return df.selectExpr(*exprs) if changed else df
+
+
+class _ParquetCollections(Source):
+    """A directory of ``<collection>.parquet`` (single files or Spark
+    output directories) with each collection's resolved schema cached
+    on the instance — see the module docstring for the rule."""
+
+    #: footer sniff stored with each inferred schema: the columns the
+    #: scan converts from nano longs (none by default; pyarrow cannot
+    #: open footers with VARIANT columns)
+    _nano_columns = staticmethod(lambda path: [])
+
+    def __init__(self, directory: str, static_fields: dict[str, dict[str, str]] | None = None):
+        self.directory = directory
+        self.static_fields = static_fields or {}
+        #: collection -> (stamp, inferred schema, nano-timestamp columns)
+        self._schemas: dict[str, tuple[tuple, StructType, list[str]]] = {}
+
+    def _path(self, collection: str) -> str:
+        return os.path.join(self.directory, f"{collection}.parquet")
+
+    def _resolve(
+        self, spark: SparkSession, collection: str
+    ) -> tuple[str, StructType, list[str], DataFrame | None]:
+        """(path, inferred schema, nano-timestamp columns, inferring
+        read) of a collection. Spark's inference job runs only on a
+        stamp miss, whose read comes back for reuse; None on a hit."""
+        path = self._path(collection)
+        try:
+            # signed BEFORE inferring: a file changing in between leaves
+            # the old stamp, so the next call re-resolves
+            stamp = (
+                _file_signature(path),
+                tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS),
+            )
+        except OSError:
+            stamp = None  # missing: the read below raises Spark's own error
+        hit = self._schemas.get(collection)
+        if stamp is not None and hit is not None and hit[0] == stamp:
+            return path, hit[1], hit[2], None
+        df = spark.read.parquet(path)
+        schema = df.schema
+        nanos = self._nano_columns(path)
+        if stamp is not None:
+            self._schemas[collection] = (stamp, schema, nanos)
+        return path, schema, nanos, df
+
+    def _read(self, spark: SparkSession, collection: str) -> tuple[DataFrame, StructType, list[str]]:
+        """(raw batch read, schema, nano-timestamp columns): the
+        inference's own read on a miss, a job-free read on a hit."""
+        path, schema, nanos, df = self._resolve(spark, collection)
+        if df is None:
+            df = spark.read.schema(schema).parquet(path)
+        return df, schema, nanos
+
+    def write(self, df: DataFrame, collection: str, mode: str = "overwrite") -> None:
+        try:
+            df.write.mode(mode).parquet(self._path(collection))
+        finally:
+            self._schemas.pop(collection, None)
+
+
+class ParquetDirSource(_ParquetCollections):
     # columnar scan: Catalyst pushes filters/columns/limits into the
     # parquet reader (asserted in tests/test_plans.py); raw = Spark SQL
     # over the collection view; write = parquet sink
     capabilities = frozenset(
         {CAP_FILTER, CAP_PROJECT, CAP_LIMIT, CAP_COUNT, CAP_RAW, CAP_WRITE}
     )
-
-    def __init__(self, directory: str, static_fields: dict[str, dict[str, str]] | None = None):
-        self.directory = directory
-        self.static_fields = static_fields or {}
+    _nano_columns = staticmethod(_nano_ts_columns)
 
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        path = os.path.join(self.directory, f"{collection}.parquet")
-        df = spark.read.parquet(path)
-        for c in _nano_ts_columns(path):
-            # ns → µs truncation matches how µs-native engines read the file
-            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` DIV 1000)"))
-        return _denaive_ntz(df)
-
-    def write(self, df: DataFrame, collection: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(os.path.join(self.directory, f"{collection}.parquet"))
+        return _to_engine_types(*self._read(spark, collection))
 
     def stream_table(
         self, spark: SparkSession, collection: str, max_files_per_trigger: int = 1
@@ -173,8 +280,7 @@ class ParquetDirSource(Source):
         """Incremental file-stream over the collection (one trigger per
         ``max_files_per_trigger`` files) — feeds partial-stream queries
         (miso-workflow/src/partial_stream.rs analog)."""
-        path = os.path.join(self.directory, f"{collection}.parquet")
-        schema = spark.read.parquet(path).schema
+        path, schema, nanos, _ = self._resolve(spark, collection)
         reader = spark.readStream.schema(schema).option(
             "maxFilesPerTrigger", max_files_per_trigger
         )
@@ -186,9 +292,7 @@ class ParquetDirSource(Source):
             df = reader.option("pathGlobFilter", f"{collection}.parquet").parquet(
                 self.directory
             )
-        for c in _nano_ts_columns(path):
-            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` DIV 1000)"))
-        return _denaive_ntz(df)
+        return _to_engine_types(df, schema, nanos)
 
 
 class JsonDirSource(Source):
@@ -267,7 +371,7 @@ class JsonDynamicDirSource(Source):
         )
 
 
-class DynamicParquetDirSource(Source):
+class DynamicParquetDirSource(_ParquetCollections):
     """Directory of ``<collection>.parquet`` files whose columns are
     Spark 4 VARIANT — dynamic (per-row mixed-type, missing-vs-null
     preserving) tables AT REST. This is the 100 TB dynamic story:
@@ -285,19 +389,8 @@ class DynamicParquetDirSource(Source):
 
     capabilities = frozenset({CAP_FILTER, CAP_PROJECT, CAP_LIMIT, CAP_RAW, CAP_WRITE})
 
-    def __init__(self, directory: str, static_fields: dict[str, dict[str, str]] | None = None):
-        self.directory = directory
-        self.static_fields = static_fields or {}
-
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        return spark.read.parquet(
-            os.path.join(self.directory, f"{collection}.parquet")
-        )
-
-    def write(self, df: DataFrame, collection: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(
-            os.path.join(self.directory, f"{collection}.parquet")
-        )
+        return self._read(spark, collection)[0]
 
 
 class CsvDirSource(Source):

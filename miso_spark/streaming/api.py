@@ -143,12 +143,13 @@ def _sessionize_group(
     # Vectorized ns→µs conversion (r15, guide §4.2): the former per-row
     # pd.Timestamp(ts).value generator paid Python object construction
     # per event; astype("int64")//1000 floors identically (same ns
-    # epoch, same floor division).
+    # epoch, same floor division). The explicit datetime64[ns] step
+    # keeps it unit-independent like .value was: pandas 2 keeps a
+    # datetime64[us] column in µs, whose int64 view is not ns.
     stamps: list[int] = []
     for pdf in pdfs:
-        stamps.extend(
-            (pd.to_datetime(pdf["ts"]).astype("int64") // 1000).tolist()
-        )
+        ns = pd.to_datetime(pdf["ts"]).astype("datetime64[ns]")
+        stamps.extend((ns.astype("int64") // 1000).tolist())
 
     out = []
     for us in sorted(stamps):
@@ -315,11 +316,12 @@ def minhash_signature_col(text_col, num_hashes: int = 32, shingle_n: int = 3):
     shingle), k))`` over the doc's word-``shingle_n``-gram shingles —
     the same seed-remixed-long family as the batch pipeline's
     ``minhash_signature_from_hashes`` (min over the multiset equals min
-    over the set, so no distinct pass is needed). Short docs keep their
-    partial tail shingles — self-consistent within the streaming
-    operator; signatures are NOT byte-compatible with the batch
-    pipeline's rows (different shingle normalization), only
-    behaviorally equivalent.
+    over the set, so no distinct pass is needed). Shingle normalization
+    (lower + trim + whitespace collapse, as ``functions.text.normalize``)
+    and indexing also match the batch ``shingles``, short docs keeping
+    one partial shingle there too, so the signatures equal
+    ``functions.dedup.minhash_signature``'s byte for byte (checked on
+    the sf0.001 and sf0.01 document corpora).
     """
     shh = _shingle_hashes_col(text_col, shingle_n)
     return F.array(
@@ -514,6 +516,13 @@ def near_dedup_stream(
     with no new data, so the stream never quiesces: use a fixed
     ``trigger(processingTime=...)`` and poll progress rather than
     ``processAllAvailable()`` (which would block forever).
+
+    State compatibility: the r15 signature family (``xxhash64(h, k)``
+    over the shingle hash ``h = xxhash64(shingle)``, replacing
+    ``xxhash64(shingle, k)``) changed every stored signature. A stream
+    restarted from a checkpoint written before that change runs without
+    error but never matches the documents ingested before it — discard
+    such checkpoints and start fresh.
     """
     rows = num_hashes // bands
     banded = (

@@ -97,8 +97,16 @@ class _NoPushSource:
 # ---------------------------------------------------------------------------
 # fixtures: stub + source per connector
 
-BASE = corpus.load_base_cases()
-RAW = corpus.load_quickwit_raw_cases()
+def _cases(load):
+    """A corpus case list for parametrize. Without the reference
+    checkout there is nothing to load: the arms collect empty and the
+    module's skipif reports them skipped, instead of the load erroring
+    the whole module at import."""
+    return load() if os.path.exists(corpus.TEST_CASES_RS) else []
+
+
+BASE = _cases(corpus.load_base_cases)
+RAW = _cases(corpus.load_quickwit_raw_cases)
 
 
 def _static_fields(ts_map):

@@ -236,7 +236,9 @@ EQUIVALENT = {
 }
 
 
-CASES, ERRORS = oc.load_cases()
+# loaded only when the reference checkout is present, so the module's
+# skipif reports the arms skipped instead of the load erroring at import
+CASES, ERRORS = oc.load_cases() if os.path.exists(oc.REF) else ([], [])
 
 
 def test_extraction_is_complete():

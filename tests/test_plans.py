@@ -347,3 +347,18 @@ def test_minhash_verify_is_intersect_not_probe_join(spark):
     # and a min(xxhash64(...)) column
     for agg in re.findall(r"ObjectHashAggregate.*", plan):
         assert "min(xxhash64" not in agg, agg
+
+
+def test_minhash_verify_evaluates_array_intersect_once(spark):
+    """Pins the single-evaluation barrier in the exact-Jaccard verify
+    (functions/dedup.py, the ``spark_partition_id()*0`` term): the
+    optimized plan of the dedup_minhash_verified pipeline holds exactly
+    one array_intersect. If Catalyst ever folds ``x*0`` or lets the
+    nondeterministic term collapse, the intersect is inlined into the
+    jaccard numerator, denominator and pushed join condition (3 sites)."""
+    from miso_spark.catalog import _b_dedup_minhash_verified
+
+    spark.catalog.clearCache()
+    df = _b_dedup_minhash_verified(spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_intersect(") == 1, plan

@@ -111,33 +111,36 @@ def test_rollup_partials_merge_to_batch_answer(spark, tmp_path):
     assert got == expected
 
 
+class _FakeState:
+    """Stand-in for applyInPandasWithState's GroupState."""
+
+    def __init__(self, value, timed_out=False):
+        self._value = value
+        self.exists = value is not None
+        self.hasTimedOut = timed_out
+        self.removed = False
+        self.updated = None
+
+    @property
+    def get(self):
+        return self._value
+
+    def remove(self):
+        self.removed = True
+
+    def update(self, v):
+        self.updated = v
+
+    def setTimeoutDuration(self, ms):
+        self.rearmed = True
+
+
 def test_sessionize_timeout_flushes_idle_session():
     """Processing-time timeout invocation (no new data) must emit the
     buffered session and drop the state — not silently re-arm."""
     from miso_spark.streaming.api import _sessionize_group
 
-    class FakeState:
-        def __init__(self, value):
-            self._value = value
-            self.exists = value is not None
-            self.hasTimedOut = True
-            self.removed = False
-            self.updated = None
-
-        @property
-        def get(self):
-            return self._value
-
-        def remove(self):
-            self.removed = True
-
-        def update(self, v):
-            self.updated = v
-
-        def setTimeoutDuration(self, ms):
-            self.rearmed = True
-
-    st = FakeState((1_000_000, 2_000_000, 3))
+    st = _FakeState((1_000_000, 2_000_000, 3), timed_out=True)
     out = list(_sessionize_group((42,), iter([]), st, gap_s=1800.0, use_timeout=True))
     assert st.removed and st.updated is None
     assert len(out) == 1
@@ -145,9 +148,31 @@ def test_sessionize_timeout_flushes_idle_session():
     assert (row["user_id"], row["n_events"]) == (42, 3)
 
     # timed-out key with no buffered session: just clean up
-    st2 = FakeState(None)
+    st2 = _FakeState(None, timed_out=True)
     out2 = list(_sessionize_group((7,), iter([]), st2, gap_s=1800.0, use_timeout=True))
     assert st2.removed and out2 == []
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_sessionize_group_timestamp_unit_independent(unit):
+    """pandas 2 keeps a datetime64[us] column in µs: sessionize must
+    read the same instants whatever unit arrives."""
+    import pandas as pd
+
+    from miso_spark.streaming.api import _sessionize_group
+
+    stamps = pd.to_datetime(
+        ["2024-01-01 00:00:00", "2024-01-01 00:10:00", "2024-01-01 02:00:00"]
+    ).astype(f"datetime64[{unit}]")
+    st = _FakeState(None)
+    out = list(_sessionize_group((1,), iter([pd.DataFrame({"ts": stamps})]), st, gap_s=1800.0))
+    assert len(out) == 1
+    row = out[0].iloc[0]
+    assert row["session_start"] == pd.Timestamp("2024-01-01 00:00:00")
+    assert row["session_end"] == pd.Timestamp("2024-01-01 00:10:00")
+    assert row["n_events"] == 2
+    start_us = pd.Timestamp("2024-01-01 02:00:00").value // 1000
+    assert st.updated == (start_us, start_us, 1)
 
 
 def test_tee_stream_side_write(spark, events_stream_dir, tmp_path):
